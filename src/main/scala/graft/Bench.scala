@@ -24,6 +24,16 @@ object Bench {
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
+  /** A failed entry as `name: ExceptionClass: first line of message`,
+    * ASCII-only (other characters become `?`) and at most 300
+    * characters, so the result line stays one parseable ASCII line.
+    */
+  private[graft] def describeFailure(name: String, e: Throwable): String = {
+    val firstLine = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    s"$name: ${e.getClass.getName}: $firstLine"
+      .map(c => if (c >= ' ' && c <= '~') c else '?').take(300)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -46,17 +56,23 @@ object Bench {
     // (a real regression moves BOTH; noise moves only the median). A
     // query that throws records the sentinel -1 (and lands in "errors"):
     // a fast failure must not masquerade as a speedup in the published
-    // totals.
+    // totals. The first failure's exception is recorded with the name
+    // (see describeFailure).
     val errors = scala.collection.mutable.ListBuffer.empty[String]
     def bench(name: String)(run: => Unit): (Double, Double) = {
-      var failed = false
-      try run catch { case _: Throwable => failed = true } // warm-up
+      var failure: Option[Throwable] = None
+      def attempt(): Unit =
+        try run catch { case e: Throwable => if (failure.isEmpty) failure = Some(e) }
+      attempt() // warm-up
       val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        try run catch { case _: Throwable => failed = true }
+        attempt()
         (System.nanoTime() - t0) / 1e9
       }.sorted
-      if (failed) { errors += name; (-1.0, -1.0) } else (ts(0), ts(1))
+      failure match {
+        case Some(e) => errors += describeFailure(name, e); (-1.0, -1.0)
+        case None => (ts(0), ts(1))
+      }
     }
 
     // Ambient-load sentinel (r13: the driver's loaded bench session cost
@@ -308,18 +324,18 @@ object Bench {
     // minimal JSON string escaping: a data dir (or future query name)
     // containing a quote/backslash/control char must not yield an
     // unparseable line — that would break the grading pipeline for the
-    // whole run
+    // whole run; non-ASCII is escaped too, so the line stays ASCII-only
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
+      case c if c < ' ' || c > '~' => "\\u%04x".format(c.toInt)
       case c => c.toString
     } + "\""
     val errs = errors.map(jstr).mkString("[", ",", "]")
     val total = all.map(_._2._1).filter(_ >= 0).sum
     val totalMed = all.map(_._2._2).filter(_ >= 0).sum
     val calibLast = calibrate()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_med":$qsMed,"total_med":$totalMed,"errors":$errs,"sf":${jstr(sfDir)},"calib_first_s":$calibFirst,"calib_last_s":$calibLast,"note":"action=noop-write, timed=min-of-3 after warm-up (queries=min, queries_med=median: the min-median spread is the session-noise envelope); failed queries report -1 and are excluded from totals (r6) + bench-only ${benchOnly.mkString(", ")} entries; calib_* = fixed-cost parallel in-memory sort timed before/after the suite (BASELINE.md protocol note has the clean-machine reference) — elevated values mean ambient machine load, read drift accordingly"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_med":$qsMed,"total_med":$totalMed,"errors":$errs,"sf":${jstr(sfDir)},"calib_first_s":$calibFirst,"calib_last_s":$calibLast,"note":"action=noop-write, timed=min-of-3 after warm-up (queries=min, queries_med=median: the min-median spread is the session-noise envelope); failed queries report -1 and are excluded from totals (r6) + bench-only ${benchOnly.mkString(", ")} entries; calib_* = fixed-cost parallel in-memory sort timed before/after the suite (BASELINE.md protocol note has the clean-machine reference); elevated values mean ambient machine load, read drift accordingly"}"""
     println(line)
     // Persist the full per-query map too — stdout tails get truncated in
     // round artifacts, making totals unauditable; the file keeps every

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.Sources
+
 /** Inverted token index over a document corpus — the retrieval side of
   * curation recon: keyword search, contamination lookups ("which training
   * docs contain this eval phrase's tokens"), boilerplate investigation —
@@ -29,7 +31,7 @@ object InvertedIndex {
   def materialize(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     build(docs, idCol, textCol).write.mode("overwrite").parquet(path)
-    docs.sparkSession.read.parquet(path)
+    Sources.readParquet(docs.sparkSession, path)
   }
 
   /** Incremental maintenance: tokenize ONLY the new batch and append its
@@ -111,7 +113,7 @@ object InvertedIndex {
   def materializePositional(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     buildPositional(docs, idCol, textCol).write.mode("overwrite").parquet(path)
-    docs.sparkSession.read.parquet(path)
+    Sources.readParquet(docs.sparkSession, path)
   }
 
   /** Incremental maintenance for the POSITIONAL index — [[appendTo]]'s
@@ -282,7 +284,7 @@ object InvertedIndex {
   def materializeScored(docs: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     buildScored(docs, idCol, textCol).write.mode("overwrite").parquet(path)
-    val reopened = docs.sparkSession.read.parquet(path)
+    val reopened = Sources.readParquet(docs.sparkSession, path)
     writeTotals(path, corpusTotals(reopened, idCol))
     reopened
   }
@@ -332,7 +334,7 @@ object InvertedIndex {
       // write and the totals rewrite leaves NO sidecar — the next attach
       // recomputes exactly instead of silently serving stale (N, avgdl)
       val prior = priorTotals.orElse(readTotals(path)).getOrElse {
-        if (hasDataFiles(path)) corpusTotals(docs.sparkSession.read.parquet(path), idCol)
+        if (hasDataFiles(path)) corpusTotals(Sources.readParquet(docs.sparkSession, path), idCol)
         else (0L, 0L)
       }
       // in-progress marker for the append window: an attachScored racing
@@ -441,7 +443,7 @@ object InvertedIndex {
     */
   def attachScored(spark: org.apache.spark.sql.SparkSession, path: String,
       idCol: String): (DataFrame, (Long, Double)) = {
-    val scored = spark.read.parquet(path)
+    val scored = Sources.readParquet(spark, path)
     val totals = readTotals(path).getOrElse {
       val t = corpusTotals(scored, idCol)
       // best-effort persist: a read-only mount (a consumer attaching a

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.ArtifactIo
+import graft.sources.{ArtifactIo, Sources}
 
 /** Shared persistence plumbing for append-maintained screening artifacts:
   * the LSH sketches ([[Dedup.minhashSketch]], [[Similarity.srpSketch]])
@@ -103,7 +103,7 @@ private[graft] object SketchArtifact {
     * constraint (the r16 documented workaround was a maintenance window).
     *
     * Caller contract: `screen` must BUILD AND EXECUTE its artifact read
-    * inside the thunk (`spark.read.parquet(path)` + the action), never
+    * inside the thunk (`Sources.readParquet` + the action), never
     * close over a pre-built DataFrame — a stale plan pins the OLD file
     * listing and would re-fail identically on retry; re-reading resolves
     * the freshly-compacted (screen-equivalent) directory. Side-effecting
@@ -157,7 +157,7 @@ private[graft] object SketchArtifact {
     // safe to sweep: the live path exists (or this read fails loudly)
     fs.deleteTree(tmp)
     fs.deleteTree(old)
-    spark.read.parquet(path)
+    Sources.readParquet(spark, path)
       .groupBy(keyCols.map(col): _*)
       .agg(flatten(collect_list(col(idsCol))).as(idsCol))
       .write.mode("overwrite").parquet(tmp) // job runs HERE — reads finish before the swap

@@ -394,10 +394,9 @@ private[graft] object LocalArtifactIo extends ArtifactIo {
 
   def deleteTree(path: String): Unit = FsUtil.deleteTree(Paths.get(path))
 
-  def readBytes(path: String): Option[Array[Byte]] = {
-    val p = Paths.get(path)
-    if (!Files.exists(p)) None else Some(Files.readAllBytes(p))
-  }
+  def readBytes(path: String): Option[Array[Byte]] =
+    try Some(Files.readAllBytes(Paths.get(path)))
+    catch { case _: java.nio.file.NoSuchFileException => None }
 
   def writeAtomic(path: String, bytes: Array[Byte]): Unit = {
     val dst = Paths.get(path)
@@ -586,20 +585,24 @@ private[graft] class HadoopArtifactIo(conf: Configuration) extends ArtifactIo {
 
   def readBytes(path: String): Option[Array[Byte]] = {
     val p = new HPath(path)
-    statOf(p).map { st =>
-      // whole-file-in-memory primitive: pointers, markers, manifests —
-      // all small by design. A >=2GB file would truncate silently
-      // through toInt; fail loudly instead of serving a short read.
-      require(st.getLen < Int.MaxValue,
-        s"artifact store: readBytes($path) is a small-metadata primitive, " +
-          s"got a ${st.getLen}-byte file — not an artifact marker/manifest")
+    // the file can be deleted or replaced at any moment (an append
+    // rewrites its sidecar), so open FIRST and read to EOF from the open
+    // stream; not-found at open, or at first read on lazily-opening
+    // stores, is absence (None), never an exception
+    try {
       val in = fs(p).open(p)
       try {
-        val buf = new Array[Byte](st.getLen.toInt)
-        in.readFully(0, buf)
-        buf
+        // whole-file-in-memory primitive: pointers, markers, manifests —
+        // all small by design. A >=2GB file cannot fit one array; fail
+        // loudly instead of serving a short read.
+        statOf(p).foreach { st =>
+          require(st.getLen < Int.MaxValue,
+            s"artifact store: readBytes($path) is a small-metadata primitive, " +
+              s"got a ${st.getLen}-byte file — not an artifact marker/manifest")
+        }
+        Some(in.readAllBytes())
       } finally in.close()
-    }
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   def writeAtomic(path: String, bytes: Array[Byte]): Unit = {

@@ -362,7 +362,7 @@ object CasSnapshots {
     val v = version.orElse(latestVersion(tableDir))
       .getOrElse(throw new IllegalArgumentException(s"no committed version under $tableDir"))
     val rec = requireRecord(tableDir, v)
-    spark.read.parquet(resolvedFiles(rec).map(child(tableDir, _)): _*)
+    Sources.readParquet(spark, resolvedFiles(rec).map(child(tableDir, _)): _*)
   }
 
   /** The rows ADDED in `(fromVersion, toVersion]` — the changed-data
@@ -404,7 +404,7 @@ object CasSnapshots {
       s"readChanges: v=$fromVersion is not in v=$to's base chain of $tableDir " +
         s"(the walk reached v=$cur) — changes since a non-ancestor are undefined")
     if (delta.isEmpty) read(spark, tableDir, Some(to)).limit(0)
-    else spark.read.parquet(delta.toSeq: _*)
+    else Sources.readParquet(spark, delta.toSeq: _*)
   }
 
   /** (data-file count, total bytes) of `v`'s RESOLVED file set — one

@@ -51,7 +51,7 @@ object Compact {
     val fs = io(path)
     val n = math.max(1, math.ceil(dataBytes(path).toDouble / targetBytes).toInt)
     val tmp = path + s".compact-${java.util.UUID.randomUUID()}"
-    try spark.read.parquet(path).coalesce(n).write.parquet(tmp)
+    try Sources.readParquet(spark, path).coalesce(n).write.parquet(tmp)
     catch { case e: Throwable => fs.deleteTree(tmp); throw e }
     val old = path + s".old-${java.util.UUID.randomUUID()}"
     try fs.rename(path, old)

@@ -315,7 +315,7 @@ object PlanCache {
         if (names.isEmpty) throw new IllegalStateException(
           s"plan cache: published entry $target has an empty file manifest — " +
             "a parquet write always commits at least one part file; evict the entry")
-        else spark.read.parquet(names.map(child(target, _)): _*)
+        else Sources.readParquet(spark, names.map(child(target, _)): _*)
       case None =>
         // On a manifest-committed store a missing manifest is a corpse
         // (eviction deletes children in unspecified order and can leave
@@ -329,7 +329,7 @@ object PlanCache {
           s"plan cache: entry $target on an object store has no file manifest — " +
             "a concurrent eviction gutted it between the hit check and this read; " +
             "re-attach to recompute")
-        else spark.read.parquet(target)
+        else Sources.readParquet(spark, target)
     }
 
   /** The store-appropriate primitives for `cacheDir` — the plan cache's

@@ -416,7 +416,7 @@ object Snapshots {
       s"readChanges: v=$fromVersion is not in v=$to's base chain of $tableDir " +
         s"(the walk reached v=$cur) — changes since a non-ancestor are undefined")
     if (delta.isEmpty) read(spark, tableDir, Some(to)).limit(0)
-    else spark.read.parquet(delta.toSeq: _*)
+    else Sources.readParquet(spark, delta.toSeq: _*)
   }
 
   /** Record the version `stage` was derived from (0 = none — first
@@ -687,8 +687,8 @@ object Snapshots {
     val v = version.orElse(latestVersion(tableDir))
       .getOrElse(throw new IllegalArgumentException(s"no committed version under $tableDir"))
     if (io(tableDir).exists(child(tableDir, s"v=$v", CarryFile)))
-      spark.read.parquet(resolvedDataFiles(tableDir, v).map(child(tableDir, _)): _*)
-    else spark.read.parquet(s"$tableDir/v=$v")
+      Sources.readParquet(spark, resolvedDataFiles(tableDir, v).map(child(tableDir, _)): _*)
+    else Sources.readParquet(spark, s"$tableDir/v=$v")
   }
 
   /** Highest committed version, if any. */

@@ -1,6 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession, graftbridge}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink formats beyond parquet. The reference's storage layer is a
@@ -14,8 +17,61 @@ object Sources {
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** Open a parquet artifact graft wrote without Spark's one-task
+    * schema-inference job (the reference binds a stored DSet from its
+    * metadata with no cluster pass, `DSet.fs` `loadSource`): the schema
+    * comes from one footer read on the driver ([[footerSchema]]) and is
+    * handed to `spark.read.schema(...)`. Same schema, rows and plan as
+    * `spark.read.parquet(paths: _*)`, which it falls back to wherever the
+    * shortcut could differ. Reads of user directories, which may be
+    * partitioned or mixed-schema, keep `spark.read.parquet`.
+    */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The schema from the footer of the first data file (by name) of the
+    * first of `paths` (in path order) — for one directory or a list of
+    * files, the file Spark's inference reads, as it takes the first data
+    * file in full-path order — or None where that inference must run:
+    *   - `spark.sql.parquet.mergeSchema` on (every file is read);
+    *   - a glob path (Spark expands it);
+    *   - `_metadata`/`_common_metadata` summaries (Spark prefers them)
+    *     or a streaming sink's `_spark_metadata` log (it names the
+    *     committed files);
+    *   - no direct data file, or a visible subdirectory: empty
+    *     directories keep `UNABLE_TO_INFER_SCHEMA`, partitioned layouts
+    *     keep partition discovery;
+    *   - any failure to list or read (a missing path, a file deleted
+    *     mid-read): the inferring read then fails or succeeds as before.
+    */
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+        paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else try {
+      val conf = spark.sessionState.newHadoopConf()
+      val first = new Path(paths.min)
+      val fs = first.getFileSystem(conf)
+      val status = fs.getFileStatus(first)
+      val file =
+        if (!status.isDirectory) Some(status).filterNot { s =>
+          isSummary(s.getPath.getName) || graftbridge.isHiddenFileName(s.getPath.getName)
+        }
+        else {
+          val children = fs.listStatus(first)
+          val names = children.map(_.getPath.getName)
+          val visible = children.filterNot(c => graftbridge.isHiddenFileName(c.getPath.getName))
+          if (names.exists(n => isSummary(n) || n == "_spark_metadata") ||
+              visible.exists(_.isDirectory)) None
+          else visible.minByOption(_.getPath.getName)
+        }
+      file.map(graftbridge.parquetFooterSchema(spark, _, conf))
+    } catch { case NonFatal(_) => None }
+
+  private def isSummary(name: String): Boolean =
+    name == "_metadata" || name == "_common_metadata"
 
   /** CSV keeps a header; schema must be supplied on read (or inferred) —
     * prefer explicit schema at scale to avoid an inference pass.

@@ -6,6 +6,7 @@ import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.InvertedIndex
+import graft.sources.Sources
 
 /** Streaming maintenance of the SCORED (BM25) index — the continuous
   * closure of the ii family, [[ScreenedIngest]]'s twin on the retrieval
@@ -98,7 +99,7 @@ object IndexIngest {
             t => length(t) > 0)) > 0)
         val fresh = (
           if (idScreen && ArtifactPaths.hasParquet(indexPath)) {
-            val idx = spark.read.parquet(indexPath)
+            val idx = Sources.readParquet(spark, indexPath)
             // loud layout check: a wrong path (or a membership/positional
             // artifact) must name the contract, not die in a generic
             // unresolved-column AnalysisException deep in the anti-join

@@ -6,6 +6,7 @@ import org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
+import graft.sources.Sources
 
 /** Streaming ingest with an INLINE near-dup screen and sketch
   * maintenance — the closed incremental loop as one continuous pipeline
@@ -90,15 +91,15 @@ object ScreenedIngest {
         val sims = Dedup.simhashSims(admissible, idCol, textCol).localCheckpoint()
         try {
           // the whole read-build-and-execute runs inside the retry thunk
-          // (fresh spark.read.parquet each attempt — see screenRetrying's
+          // (fresh Sources.readParquet each attempt — see screenRetrying's
           // contract); the corpus/sketch WRITES stay outside it
           val kept = graft.operators.SketchArtifact.screenRetrying() {
             val screened = Dedup.incrementalSimhashKeepFromSims(
-              admissible, sims, spark.read.parquet(sketchPath), idCol,
+              admissible, sims, Sources.readParquet(spark, sketchPath), idCol,
               maxHamming, maxBucketSize)
             (
               if (idScreen && ArtifactPaths.hasParquet(corpusDir))
-                screened.join(spark.read.parquet(corpusDir).select(col(idCol)),
+                screened.join(Sources.readParquet(spark, corpusDir).select(col(idCol)),
                   Seq(idCol), "left_anti")
               else screened
             ).localCheckpoint()

@@ -68,6 +68,38 @@ object graftbridge {
     column(new catalyst.expressions.aggregate.CollectTopK(expression(sortKey), num, true, 0, 0)
       .toAggregateExpression())
 
+  /** The Spark schema of ONE parquet data file, read from its footer on
+    * the driver: the schema Spark's inference derives when it touches a
+    * single file (`ParquetFileFormat.mergeSchemasInParallel`: Spark's
+    * own row-metadata schema when the writer stored one, else the
+    * footer's message type through a converter configured exactly as
+    * that inference configures it), without the one-task job the
+    * inference runs to get there. The footer read skips row groups.
+    */
+  def parquetFooterSchema(spark: SparkSession, file: org.apache.hadoop.fs.FileStatus,
+      hadoopConf: org.apache.hadoop.conf.Configuration): types.StructType = {
+    import execution.datasources.parquet._
+    val conf = spark.sessionState.conf
+    val converter = new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = conf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = conf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hadoopConf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
+  }
+
+  /** Whether Spark's file listing skips a child NAME (`_`/`.`-prefixed
+    * bookkeeping, in-flight `._COPYING_` copies; the `_metadata`
+    * summaries are kept) — the rule every file-source read applies.
+    */
+  def isHiddenFileName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
   /** Wait for queued listener-bus events to be delivered — measurement
     * harnesses (OptProbe) tally task metrics through a SparkListener, and
     * the bus is async, so a read taken right after an action can miss

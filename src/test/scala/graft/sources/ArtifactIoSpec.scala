@@ -225,4 +225,33 @@ class ArtifactIoSpec extends SparkSuite {
     }
     assert(top(fsPath) == top(localPath))
   }
+
+  test("readTotals racing a sidecar delete-and-rewrite loop sees only Some or None") {
+    for (root <- Seq(tmpDir("aio-race-local"), "file:" + tmpDir("aio-race-hadoop"))) {
+      val idx = root + "/idx"
+      val io = ArtifactIo.forPath(idx)
+      io.createDirs(idx)
+      graft.operators.InvertedIndex.writeTotals(idx, (1L, 2L))
+      @volatile var stop = false
+      val writer = new Thread(() => {
+        var i = 1L
+        while (!stop) {
+          // what appendScored does to the sidecar while it commits
+          io.delete(idx + "/_graft_bm25_totals")
+          graft.operators.InvertedIndex.writeTotals(idx, (i, 2 * i))
+          i += 1
+        }
+      })
+      writer.start()
+      try {
+        val seen = (1 to 5000).map(_ => graft.operators.InvertedIndex.readTotals(idx))
+        assert(seen.forall(_.forall { case (docs, toks) => toks == 2 * docs }),
+          s"$root: a torn or stale-length sidecar read")
+        assert(seen.exists(_.isDefined), s"$root: the reader never saw the sidecar")
+      } finally {
+        stop = true
+        writer.join()
+      }
+    }
+  }
 }
