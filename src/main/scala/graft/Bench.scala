@@ -354,13 +354,6 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(hist), stamped + "\n",
       java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     catch { case e: Exception => System.err.println(s"[bench] could not append $hist: ${e.getMessage}") }
-    // Compact totals-only line printed LAST (r19 verdict item 2): round
-    // artifacts keep only the final ~2 KB of stdout, and the full
-    // per-query line above outgrew that window (the parsed totals were
-    // lost two rounds running). The full map still prints above and
-    // persists to bench_full.json + bench_history.jsonl; this line is
-    // small enough to land whole in any tail capture.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","total_med":$totalMed,"n_queries":${all.size},"errors":$errs,"sf":${jstr(sfDir)},"calib_first_s":$calibFirst,"calib_last_s":$calibLast,"full_map":"previous stdout line; also bench_full.json"}""")
     spark.stop()
   }
 }

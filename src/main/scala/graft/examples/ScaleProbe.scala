@@ -590,11 +590,9 @@ object ScaleProbe {
       // lakehouse twin): one full lifecycle per store — commit the base
       // corpus (docs with doc_id%10 ∉ {7,8,9}), then three commitAppend
       // batches — on a scheme-less LOCAL table and on the IDENTICAL
-      // directory via file:. The commit legs must match (same parquet
-      // job); the APPEND legs price the one documented store difference:
-      // carry-forward is hard-link O(files) locally but byte-copy
-      // O(table bytes) on Hadoop stores — this probe puts the real
-      // number on that note instead of leaving it a scaladoc claim.
+      // directory via file:. Both legs run the same protocol (a parquet
+      // write + one conditional put per commit, inherited files carried
+      // by name), so commit and append legs must match across stores.
       if (args.contains("--fssnap")) {
         import graft.sources.Snapshots
         val docs = Tables.load(spark, sfDir, "documents")
@@ -619,33 +617,15 @@ object ScaleProbe {
         val (cH, aH) = once(s"file:$root/hadoop-table")
         println(f"[probe] ${"fssnap_hadoop_commit"}%-24s ${cH}%6.2f s")
         println(f"[probe] ${"fssnap_hadoop_appends3"}%-24s ${aH}%6.2f s")
-        // manifest legs (the r17 tier): same lifecycle with
-        // CarryManifest appends — each append writes ONLY its batch +
-        // a manifest, so the append legs must be at-or-below the
-        // carry-by-copy legs and the gap widens with table bytes
-        def onceManifest(table: String): Double = {
-          graft.sources.ArtifactIo.forPath(table).deleteTree(table)
-          Snapshots.commit(base, table): Unit
-          val t1 = System.nanoTime()
-          Seq(7, 8, 9).foreach { m =>
-            Snapshots.commitAppend(docs.filter(col("doc_id") % 10 === m), table,
-              carry = Snapshots.CarryManifest): Unit
-          }
-          (System.nanoTime() - t1) / 1e9
-        }
-        val aLM = onceManifest(s"$root/local-man")
-        println(f"[probe] ${"fssnap_local_man_app3"}%-24s ${aLM}%6.2f s")
-        val aHM = onceManifest(s"file:$root/hadoop-man")
-        println(f"[probe] ${"fssnap_hadoop_man_app3"}%-24s ${aHM}%6.2f s")
       }
-      // --fssnapchain — the manifest-chain compaction cadence (r18, the
-      // r17 verdict's item 6): TEN CarryManifest appends on one table,
-      // per-append wall time + the carry manifest's inherited-file-name
-      // count (the O(resolved file count) term each manifest write
-      // re-lists), then a compactVersion RE-BASE, then three more
-      // appends — the post-compaction carry counts and append times must
-      // fall back to the start-of-chain envelope, which is the measured
-      // case for SCALING.md's compact-every-K-appends guidance.
+      // --fssnapchain — the append-chain compaction cadence (r18, the
+      // r17 verdict's item 6): TEN appends on one table, per-append wall
+      // time + the commit record's inherited-file-name count (the
+      // O(resolved file count) term each record write carries), then a
+      // compactVersion RE-BASE, then three more appends — the
+      // post-compaction carry counts and append times must fall back to
+      // the start-of-chain envelope, which is the measured case for
+      // SCALING.md's compact-every-K-appends guidance.
       if (args.contains("--fssnapchain")) {
         import graft.sources.{Compact, Snapshots}
         val docs = Tables.load(spark, sfDir, "documents")
@@ -656,7 +636,7 @@ object ScaleProbe {
         def appendOnce(i: Int): (Double, Int) = {
           val t0 = System.nanoTime()
           val v = Snapshots.commitAppend(docs.filter(col("doc_id") % 20 === 10 + (i % 10)),
-            table, carry = Snapshots.CarryManifest)
+            table)
           (((System.nanoTime() - t0) / 1e9), Snapshots.carriedFileCount(table, v))
         }
         val chain = (0 until 10).map(appendOnce)
@@ -674,20 +654,17 @@ object ScaleProbe {
           println(f"[probe] ${s"fssnapchain_post${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
         }
       }
-      // --cassnap — the CAS snapshot protocol priced against the
-      // rename-store protocol (r19; the --pccache parity-probe pattern
-      // applied to tv6's family): the SAME ten-append + compact + three
-      // post-append chain run twice — `file:` Snapshots/CarryManifest
-      // (one claim rename + locked pointer publish per append) vs
-      // `mock3c:` CasSnapshots (ONE conditional PUT per append through
-      // copy-rename staging committers). Per-append wall + the record's
-      // carried-name count (the O(resolved files) term both protocols
-      // pay); compaction re-bases both. The CAS protocol's extra work is
-      // zero — it REMOVES the lock acquisition and two renames — so it
-      // must price at parity or better per commit, modulo the mock's
-      // copy-committer staging.
+      // --cassnap — the snapshot protocol priced across store classes
+      // (r19; the --pccache parity-probe pattern applied to tv6's
+      // family): the SAME ten-append + compact + three post-append chain
+      // run twice — a `file:` table (conditional put = temp write +
+      // link) vs a `mock3c:` table (conditional put = If-None-Match PUT,
+      // staged through copy-rename committers). Per-append wall + the
+      // record's carried-name count; compaction re-bases both. The
+      // protocol is identical, so the legs must price at parity modulo
+      // the mock's copy-committer staging.
       if (args.contains("--cassnap")) {
-        import graft.sources.{ArtifactIo, CasSnapshots, Compact, ConditionalPutMockFs, Snapshots}
+        import graft.sources.{ArtifactIo, Compact, ConditionalPutMockFs, Snapshots}
         val hc = spark.sparkContext.hadoopConfiguration
         hc.set("fs.mock3c.impl", classOf[ConditionalPutMockFs].getName)
         ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3c")
@@ -696,45 +673,27 @@ object ScaleProbe {
           .select(col("doc_id"), col("lang"), col("text"))
         val base = docs.filter(col("doc_id") % 20 < 10)
         def batch(i: Int) = docs.filter(col("doc_id") % 20 === 10 + (i % 10))
-        def chainOf(label: String, commitBase: () => Unit, appendOnce: Int => (Double, Int),
-            compactNow: () => (Double, String)): Unit = {
-          commitBase()
+        def chainOf(label: String, table: String): Unit = {
+          def appendOnce(i: Int): (Double, Int) = {
+            val t0 = System.nanoTime()
+            val v = Snapshots.commitAppend(batch(i), table)
+            ((System.nanoTime() - t0) / 1e9, Snapshots.carriedFileCount(table, v))
+          }
+          Snapshots.commit(base, table): Unit
           (0 until 10).map(appendOnce).zipWithIndex.foreach { case ((t, carried), i) =>
             println(f"[probe] ${s"cassnap_${label}_app${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
           }
-          val (tc, what) = compactNow()
-          println(f"[probe] ${s"cassnap_${label}_compact"}%-24s $tc%6.2f s ($what)")
+          val t0 = System.nanoTime()
+          val (vComp, nFiles) = Compact.compactVersion(spark, table, 512L * 1024 * 1024)
+          println(f"[probe] ${s"cassnap_${label}_compact"}%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s " +
+            s"(re-based at v=$vComp -> $nFiles files)")
           (10 until 13).map(appendOnce).zipWithIndex.foreach { case ((t, carried), i) =>
             println(f"[probe] ${s"cassnap_${label}_post${i + 1}"}%-24s ${t}%6.2f s (carries $carried file names)")
           }
         }
         val root = graft.queries.QueryTmp.dir("probe-cassnap")
-        val fsT = s"file:$root/fs-man"
-        chainOf("fs_man",
-          () => { Snapshots.commit(base, fsT): Unit },
-          i => {
-            val t0 = System.nanoTime()
-            val v = Snapshots.commitAppend(batch(i), fsT, carry = Snapshots.CarryManifest)
-            ((System.nanoTime() - t0) / 1e9, Snapshots.carriedFileCount(fsT, v))
-          },
-          () => {
-            val t0 = System.nanoTime()
-            val (vComp, nFiles) = Compact.compactVersion(spark, fsT, 512L * 1024 * 1024)
-            ((System.nanoTime() - t0) / 1e9, s"re-based at v=$vComp -> $nFiles files")
-          })
-        val casT = s"mock3c:$root/cas"
-        chainOf("cas_mock3c",
-          () => { CasSnapshots.commit(base, casT): Unit },
-          i => {
-            val t0 = System.nanoTime()
-            val v = CasSnapshots.commitAppend(batch(i), casT)
-            ((System.nanoTime() - t0) / 1e9, CasSnapshots.carriedFileCount(casT, v))
-          },
-          () => {
-            val t0 = System.nanoTime()
-            val (v2, into) = CasSnapshots.compact(spark, casT, 512L * 1024 * 1024)
-            ((System.nanoTime() - t0) / 1e9, s"re-based at v=$v2 -> $into files")
-          })
+        chainOf("fs", s"file:$root/fs")
+        chainOf("cas_mock3c", s"mock3c:$root/cas")
       }
       // --pccache — the plan cache's store-protocol price (r18): one
       // cold attach (compute + publish) and one warm attach (key derive

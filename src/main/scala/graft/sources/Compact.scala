@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Two entry points. [[compactVersion]] is the DEFAULT for live tables:
   * it compacts a [[Snapshots]] table's latest version into a NEW version
-  * behind the atomic `_latest` pointer — concurrent readers see the old
+  * published by one conditional put — concurrent readers see the old
   * version or the new one, never a missing path, and pinned readers are
   * untouched (version data is immutable). Plain [[compact]] is the
   * quiesced-directory tool: it swaps IN PLACE via two renames with
@@ -26,8 +26,7 @@ import org.apache.spark.sql.SparkSession
 object Compact {
 
   /** The store-appropriate primitives for `path` (scheme-less → local
-    * `java.nio` verbatim; rename-atomic scheme'd stores → Hadoop io —
-    * the [[Snapshots]] store contract, shared).
+    * `java.nio` verbatim; rename-atomic scheme'd stores → Hadoop io).
     */
   private def io(path: String): ArtifactIo = ArtifactIo.forPath(path)
 
@@ -71,15 +70,17 @@ object Compact {
   }
 
   /** Compact a [[Snapshots]] table's latest version into a NEW snapshot
-    * version: read `v=latest`, rewrite at ~`targetBytes` files, commit as
-    * the next version (atomic pointer publish — no path-missing window,
-    * old versions untouched for pinned readers). Returns (newVersion,
-    * dataFileCount). Publishes through `Snapshots.commitIfLatest` — a
-    * data commit landing between the base read and the publish would
-    * otherwise be silently shadowed by this rewrite of OLDER content;
-    * on a lost race the rewrite is discarded and retried against the new
-    * base. Retention of the fat predecessor stays an explicit
-    * `Snapshots.drop`, as for any other version.
+    * version: read the latest version's resolved files, rewrite at
+    * ~`targetBytes` files, commit as the next version (no path-missing
+    * window, old versions untouched for pinned readers). Returns
+    * (newVersion, dataFileCount). Publishes through
+    * `Snapshots.commitIfLatest` — a data commit landing between the base
+    * read and the publish would otherwise be silently shadowed by this
+    * rewrite of OLDER content; on a lost race the rewrite is discarded
+    * and retried against the new base. The rewrite is self-contained, so
+    * it also RE-BASES an append chain: afterwards `Snapshots.retainLast`
+    * + `Snapshots.vacuum` can reclaim the predecessors' records and
+    * bytes.
     */
   def compactVersion(spark: SparkSession, tableDir: String, targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
@@ -87,26 +88,23 @@ object Compact {
     while (attempts < 5) {
       val v = Snapshots.latestVersion(tableDir)
         .getOrElse(throw new IllegalArgumentException(s"no committed version under $tableDir"))
-      // RESOLVED accounting + read: a CarryManifest version's directory
-      // holds only its own batch — the compaction must see (and rewrite)
-      // the full inherited file set. Identical numbers to the plain
-      // directory listing for a self-contained version. The rewrite is
-      // always self-contained, so compaction RE-BASES a manifest chain —
-      // after it, retention can reclaim the referenced predecessors.
+      // RESOLVED accounting: an append version's own directory holds only
+      // its batch — the compaction must see (and rewrite) the full
+      // inherited file set
       val (cnt, bytes) = Snapshots.resolvedStats(tableDir, v)
       val n = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
       // already at (or under) the target layout: a scheduled compaction
       // on a compacted table must not re-read the corpus and accrete a
-      // redundant version per run — UNLESS the version carries a
-      // manifest, where the rewrite is also the re-base that frees its
-      // referenced predecessors for retention
-      if (cnt <= n && !Snapshots.hasCarry(tableDir, v)) return (v, cnt)
+      // redundant version per run — UNLESS the version carries inherited
+      // files, where the rewrite is also the re-base that frees its
+      // predecessors for retention
+      if (cnt <= n && Snapshots.carriedFileCount(tableDir, v) == 0) return (v, cnt)
       // dataChange = false: the rewrite holds the same rows as its base,
       // so an incremental feed (Snapshots.readChanges) walks through the
       // compaction with an empty delta instead of re-baselining
       Snapshots.commitIfLatest(Snapshots.read(spark, tableDir, Some(v)).coalesce(n),
           tableDir, v, dataChange = false) match {
-        case Some(newV) => return (newV, dataFileCount(s"$tableDir/v=$newV"))
+        case Some(newV) => return (newV, Snapshots.resolvedStats(tableDir, newV)._1)
         case None       => attempts += 1 // base moved — re-read and retry
       }
     }

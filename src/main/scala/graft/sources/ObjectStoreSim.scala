@@ -156,9 +156,9 @@ class RenameByCopyMockFs extends RawLocalFileSystem {
   * at close — exactly one of N racing writers of a name wins, the losers
   * observe `FileAlreadyExistsException` from `close()` with the
   * destination untouched. That single primitive is a compare-and-swap on
-  * object existence, and it is ALL [[CasSnapshots]]' log-is-the-pointer
+  * object existence, and it is ALL [[Snapshots]]' log-is-the-pointer
   * commit protocol uses — proving the protocol never reaches for rename
-  * atomicity or locks (gate tv6, CasSnapshotsSpec).
+  * atomicity or locks (gate tv6 and the mock3c snapshot specs).
   *
   * Registration (what the gate/spec does):
   * {{{

@@ -32,6 +32,29 @@ object Sources {
       case None => spark.read.parquet(paths: _*)
     }
 
+  /** Open exactly `files` (parquet data files, e.g. a snapshot commit
+    * record's resolution) without listing them: one driver
+    * `getFileStatus` per file and the schema from the footer of the
+    * first file in path order ([[readParquet]]'s rule), handed to a file
+    * index that IS those files. `spark.read.parquet(files: _*)` would
+    * list them instead — above `spark.sql.sources
+    * .parallelPartitionDiscovery.threshold` (32) paths that listing is a
+    * Spark job per read. Same schema and rows as that read; with
+    * `spark.sql.parquet.mergeSchema` on it falls back to it.
+    */
+  def readParquetFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.isEmpty || spark.sessionState.conf.isParquetSchemaMergingEnabled)
+      spark.read.parquet(files: _*)
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val statuses = files.map { f =>
+        val p = new Path(f)
+        p.getFileSystem(conf).getFileStatus(p)
+      }
+      graftbridge.readParquetFiles(spark, statuses,
+        graftbridge.parquetFooterSchema(spark, statuses.minBy(_.getPath.toString), conf))
+    }
+
   /** The schema from the footer of the first data file (by name) of the
     * first of `paths` (in path order) — for one directory or a list of
     * files, the file Spark's inference reads, as it takes the first data

@@ -62,7 +62,11 @@ object graftbridge {
     * Ordering note: doubles compare by Spark's SQL ordering (NaN
     * greatest; -0.0 < 0.0 via java.lang.Double.compare inside the
     * interpreted struct ordering) — identical to the Scala
-    * `Ordering.Double.TotalOrdering` the typed heap used.
+    * `Ordering.Double.TotalOrdering` the typed heap used. NULLS RANK
+    * FIRST: a null sort key, or a null field inside a struct key,
+    * compares below every value, so it takes one of the `num` smallest
+    * slots. Callers over external data filter or reject null keys
+    * before this aggregate.
     */
   def collectTopK(sortKey: Column, num: Int): Column =
     column(new catalyst.expressions.aggregate.CollectTopK(expression(sortKey), num, true, 0, 0)
@@ -91,6 +95,39 @@ object graftbridge {
       org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(
       new org.apache.parquet.hadoop.Footer(file.getPath, footer), converter)
+  }
+
+  /** A parquet scan of exactly `files` with `dataSchema` — what
+    * `spark.read.schema(dataSchema).parquet(paths)` builds, minus the
+    * listing: the file index is the given statuses (no partition
+    * columns; callers pass data files whose directories carry no
+    * `k=v` names). The schema is made nullable as Spark's file-source
+    * resolution makes it.
+    */
+  def readParquetFiles(spark: SparkSession, files: Seq[org.apache.hadoop.fs.FileStatus],
+      dataSchema: types.StructType): DataFrame = {
+    import execution.datasources._
+    val relation = HadoopFsRelation(new FixedFileIndex(spark, files), new types.StructType(),
+      dataSchema.asNullable, None, new parquet.ParquetFileFormat, Map.empty)(spark)
+    spark.baseRelationToDataFrame(relation)
+  }
+
+  private final class FixedFileIndex(spark: SparkSession,
+      files: Seq[org.apache.hadoop.fs.FileStatus])
+      extends execution.datasources.PartitioningAwareFileIndex(spark, Map.empty, None) {
+    override lazy val rootPaths: Seq[org.apache.hadoop.fs.Path] = files.map(_.getPath)
+    override lazy val leafFiles =
+      scala.collection.mutable.LinkedHashMap(files.map(f => f.getPath -> f): _*)
+    override lazy val leafDirToChildrenFiles =
+      Map.empty[org.apache.hadoop.fs.Path, Array[org.apache.hadoop.fs.FileStatus]]
+    override def partitionSpec(): execution.datasources.PartitionSpec =
+      execution.datasources.PartitionSpec.emptySpec
+    override def refresh(): Unit = ()
+    override def equals(o: Any): Boolean = o match {
+      case f: FixedFileIndex => rootPaths.toSet == f.rootPaths.toSet
+      case _ => false
+    }
+    override def hashCode(): Int = rootPaths.toSet.hashCode()
   }
 
   /** Whether Spark's file listing skips a child NAME (`_`/`.`-prefixed

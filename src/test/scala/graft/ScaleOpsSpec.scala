@@ -85,24 +85,36 @@ class ScaleOpsSpec extends SparkSuite {
     // this pins the replacement to the exact keying the typed heap used:
     // k smallest (key, id) pairs per group, emitted ascending, exact-key
     // ties broken by the ascending second field. 40 partitions force
-    // partial-buffer merges; duplicated keys force the tiebreak.
+    // partial-buffer merges; duplicated keys force the tiebreak. -0.0,
+    // 0.0 and NaN keys pin the special doubles: k = 5 takes the zeros,
+    // k = 100 (a whole group) orders NaN last.
     val rows = (1 to 400).map { i =>
       val g = s"g${i % 4}"
-      (g, (i % 13).toDouble, i.toLong)
+      val key = i % 13 match {
+        case 0 => if (i % 2 == 0) -0.0 else 0.0
+        case 12 => Double.NaN
+        case m => m.toDouble
+      }
+      (g, key, i.toLong)
     }
     val df = rows.toDF("g", "key", "id").repartition(40)
-    val native = df.groupBy(col("g"))
-      .agg(org.apache.spark.sql.graftbridge.collectTopK(
-        struct(col("key").as("_1"), col("id").as("_2")), 5).as("top"))
-      .collect().map(r => r.getString(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(t => (t.getDouble(0), t.getLong(1)))).toMap
+    // compare doubles by bits: -0.0 == 0.0 and NaN != NaN under ==
+    def bits(xs: Seq[(Double, Long)]) =
+      xs.map { case (d, id) => (java.lang.Double.doubleToLongBits(d), id) }.toList
     val ord = Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
-    val expected = rows.groupBy(_._1).map { case (g, rs) =>
-      g -> rs.map(t => (t._2, t._3)).sorted(ord).take(5)
-    }
-    assert(native.keySet == expected.keySet)
-    expected.foreach { case (g, exp) =>
-      assert(native(g).toList == exp.toList, s"group $g: ${native(g)} vs $exp")
+    for (k <- Seq(5, 100)) {
+      val native = df.groupBy(col("g"))
+        .agg(org.apache.spark.sql.graftbridge.collectTopK(
+          struct(col("key").as("_1"), col("id").as("_2")), k).as("top"))
+        .collect().map(r => r.getString(0) ->
+          r.getSeq[org.apache.spark.sql.Row](1).map(t => (t.getDouble(0), t.getLong(1)))).toMap
+      val expected = rows.groupBy(_._1).map { case (g, rs) =>
+        g -> rs.map(t => (t._2, t._3)).sorted(ord).take(k)
+      }
+      assert(native.keySet == expected.keySet)
+      expected.foreach { case (g, exp) =>
+        assert(bits(native(g)) == bits(exp), s"k=$k group $g: ${native(g)} vs $exp")
+      }
     }
   }
 

@@ -6,8 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, graftbridge}
 
 import graft.operators.InvertedIndex
-import graft.sources.{ArtifactIo, CasSnapshots, ConditionalPutMockFs, PlanCache, Snapshots, Sources}
-import graft.sources.Snapshots.CarryManifest
+import graft.sources.{ArtifactIo, ConditionalPutMockFs, PlanCache, Snapshots, Sources}
 
 /** Sources.readParquet, the artifact read that takes its schema from one
   * footer on the driver: on every artifact layout graft writes it must
@@ -91,19 +90,20 @@ class ParquetReadSpec extends SparkSuite {
 
   test("Snapshots versions, plain and manifest-mode: footer read equals spark.read.parquet") {
     val plain = tmpDir("pr-snap") + "/t"
-    Snapshots.commit(docs(0, 8), plain)
-    val v2 = Snapshots.commitAppend(docs(8, 3), plain)
-    assertSameRead("plain snapshot version", Seq(s"$plain/v=$v2"))
-    assert(rows(Snapshots.read(spark, plain)) == rows(spark.read.parquet(s"$plain/v=$v2")))
+    val v1 = Snapshots.commit(docs(0, 8), plain)
+    val v1Files = Snapshots.read(spark, plain, Some(v1)).inputFiles.toSeq
+    assertSameRead("replace snapshot version", v1Files)
+    assert(rows(Snapshots.read(spark, plain, Some(v1))) == rows(spark.read.parquet(v1Files: _*)))
 
     val man = tmpDir("pr-snap-man") + "/t"
     Snapshots.commit(docs(0, 8), man)
-    Snapshots.commitAppend(docs(8, 3), man, carry = CarryManifest)
-    val v3 = Snapshots.commitAppend(docs(11, 2), man, carry = CarryManifest)
+    Snapshots.commitAppend(docs(8, 3), man)
+    val v3 = Snapshots.commitAppend(docs(11, 2), man)
     val files = Snapshots.read(spark, man, Some(v3)).inputFiles.toSeq
     assert(files.size >= 3, files)
-    assertSameRead("manifest-mode snapshot version", files)
-    assertSameRead("manifest-mode changes", Snapshots.readChanges(spark, man, 1).inputFiles.toSeq)
+    assertSameRead("append snapshot version", files)
+    assert(rows(Snapshots.read(spark, man)) == rows(spark.read.parquet(files: _*)))
+    assertSameRead("append changes", Snapshots.readChanges(spark, man, 1).inputFiles.toSeq)
   }
 
   test("CasSnapshots version on a conditional-PUT store: footer read equals spark.read.parquet") {
@@ -112,12 +112,35 @@ class ParquetReadSpec extends SparkSuite {
     ArtifactIo.addExtraScheme(hc, ArtifactIo.RenameByCopyExtraSchemesKey, "mock3c")
     ArtifactIo.addExtraScheme(hc, ArtifactIo.ConditionalPutExtraSchemesKey, "mock3c")
     val table = "mock3c:" + tmpDir("pr-cas") + "/t"
-    CasSnapshots.commit(docs(0, 8), table)
-    val v2 = CasSnapshots.commitAppend(docs(8, 3), table, tag = Some("b1"))
-    val files = CasSnapshots.read(spark, table, Some(v2)).inputFiles.toSeq
+    Snapshots.commit(docs(0, 8), table)
+    val v2 = Snapshots.commitAppend(docs(8, 3), table, tag = Some("b1"))
+    val files = Snapshots.read(spark, table, Some(v2)).inputFiles.toSeq
     assert(files.nonEmpty && files.forall(_.startsWith("mock3c:")), files)
     assertSameRead("cas snapshot version", files)
-    assert(rows(CasSnapshots.read(spark, table)) == rows(spark.read.parquet(files: _*)))
+    assert(rows(Snapshots.read(spark, table)) == rows(spark.read.parquet(files: _*)))
+  }
+
+  test("a Snapshots version resolving to more than 32 files opens with no job, " +
+      "where a path-list read of the same files lists them in one") {
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // paths, handing the record's files to spark.read lists them in a
+    // Spark job; the snapshot read stats them on the driver instead
+    val table = tmpDir("pr-snap-wide") + "/t"
+    Snapshots.commit(docs(0, 200).repartition(24), table)
+    Snapshots.commitAppend(docs(200, 200).repartition(24), table)
+    val (latest, jobs) = jobsOf(Snapshots.read(spark, table))
+    val files = latest.inputFiles.toSeq
+    assert(files.size > 32, files.size)
+    assert(jobs == 0, s"the snapshot read ran $jobs jobs before its action")
+    val (changes, feedJobs) = jobsOf(Snapshots.readChanges(spark, table, 1))
+    assert(feedJobs == 0, s"the changes read ran $feedJobs jobs before its action")
+    // the control: the same files through a path-list read run a job
+    val (listed, listJobs) = jobsOf(Sources.readParquet(spark, files: _*))
+    assert(listJobs >= 1, "the path-list read ran no job; the count is broken")
+    val inferred = spark.read.parquet(files: _*)
+    assert(latest.schema == inferred.schema && latest.schema.json == inferred.schema.json)
+    assert(rows(latest) == rows(inferred) && rows(listed) == rows(inferred))
+    assert(rows(changes) == rows(docs(200, 200)))
   }
 
   test("a mixed-schema directory: both reads take the first data file's schema") {
